@@ -27,82 +27,63 @@ SF0001 = "/root/testdata/sf0.001"
 # Everything else (already driver-verified, unchanged) follows in
 # registration order.
 _CHECK_FIRST = [
-    # ROUND 17. Head = keys whose plan/oracle/source closure changed
-    # this round (drift gate: tests/test_plan_manifest.py), then the
-    # stale-row rotation (oldest first per tools/rotation.py).
+    # Head = keys whose plan, index leaf or source closure moved in
+    # the last change (drift gate: tests/test_plan_manifest.py), then
+    # the stale-row rotation (oldest first per tools/rotation.py).
     #
-    # CHANGED (r17 optimization, guide §5 — results identical, the
-    # quality_gate materialization applied to the exact-quantile
-    # family): grouped_order_statistics now eagerly materializes its
-    # two BOUNDED decision frames (per-target owning cells, owning-
-    # cell value histogram) once per run, so the probe and pick plans
-    # read LogicalRDD leaves instead of re-embedding the stats/probe
-    # subtrees per consumer; superseded checkpoint blocks are released
-    # deterministically on rebuild (ckpt.py — ADVICE r16 #1, also
-    # wired into quality_gate's scored frame). Paired A/B + plan
-    # evidence in OPTIMIZATION_r17.md + plans/r17/. Source scans,
-    # shuffles, and every output tuple are unchanged (oracle green at
-    # sf0.01; lazy-vs-scoped tuple equality pinned in
-    # tests/test_round17_props.py).
-    "median_agg", "approx_quantiles", "quartile_agg",
-    "percentile_cont_exact", "value_outlier_iqr", "median_impute",
-    "ccnet_ppl_buckets", "quality_gate",
-    # CHANGED closure only (ADVICE r16 #2 — no plan change, no
-    # behavior change: the three dedup.py width pins and rank.py's
-    # bucket count now read spark.sql.shuffle.partitions through
-    # partitioning.shuffle_width, which falls back to
-    # defaultParallelism when the conf is non-numeric; the numeric
-    # value — every supported local/cluster conf — is identical, so
-    # plans are byte-identical and only source-closure fingerprints
-    # move). Nine of these were already due in the r10 stale rotation,
-    # so the slots do double duty.
-    # CHANGED (r17 optimization, guide §4.2 — results identical): the
-    # custom stateful sessionizer's per-group body now sorts with one
-    # np.lexsort over the raw column buffers instead of
-    # pd.concat().sort_values() and yields no frame for groups that
-    # close nothing — the function is called once per (user, batch),
-    # so the per-call constant dominated the stream (paired floors
-    # 6.35 -> 4.43 s at sf0.1). Same (ts, event_id) order, same µs
-    # arithmetic, oracle green.
-    "stream_sessionize",
-    # CHANGED (r17 optimization, guide §5 — results identical): both
-    # recall evals materialize their 8-row eval-query sample once per
-    # run; the sample is a TakeOrderedAndProject over a FULL corpus
-    # scan and was re-embedded by every consuming arm (ivfpq: probe
-    # selection, LUT build, shortlist re-rank, brute force — 22 scans
-    # -> 12 in the final plan, five sampling scans -> one).
-    "ann_recall_eval", "ivfpq_recall_eval",
-    # CHANGED closure only (VERDICT r16 #3 — no plan change, no
-    # behavior change: run_stream_to_table's stateful-operator width
-    # now resolves from spark.tripgogo.stream.statePartitions via
-    # default_state_partitions() instead of a baked-in literal 8; the
-    # resolved value everywhere this repo runs is still 8, so stream
-    # plans and results are identical and only the shared source
-    # closure of the stream keys moves).
-    "stream_dedup", "stream_embed", "stream_event_alert",
-    "stream_hop_window", "stream_quality_filter",
-    "stream_session_window", "stream_static_join", "stream_stream_join",
-    "stream_window_agg",
-    "ngram_jaccard", "ngram_jaccard_prefix", "containment_join",
-    "jaccard_topk_per_doc", "minhash_dedup", "minhash_refresh",
-    "simhash_dedup", "simhash_hamming_dedup", "stream_minhash_probe",
+    # CHANGED plan (one exact cosine top-k — results identical): every
+    # constant-query search now ends in operators/knn.py:knn_topk, whose
+    # distance hoists the query norm into a literal (same fold, 0
+    # mismatching doubles); the ANN searches prune, then call it.
+    "ann_lsh", "ann_ivf", "filtered_knn", "ivfpq_topk",
+    "corpus_refresh_cycle",
+    # CHANGED closure / index leaf only (same change, plans identical):
+    # both vectorized joins share one Arrow-batch kernel and rank
+    # window (operators/simjoin.py); the driver-side cosine picking IVF
+    # probes is one function (functions/vector.py) shared by ann.py
+    # and ivfpq_topk; the centroid frame and the ADC lookup table are
+    # built once. Index builders in ann.py moved, so their readers'
+    # leaf digests moved.
+    "sim_join", "sim_join_gemm", "knn_label_accuracy", "ann_knn_join",
+    "ann_recall_eval", "ann_index_occupancy", "ivfpq_recall_eval",
+    "pq_adc_topk", "pq_encode_error", "semdedup", "llm_generate",
+    # CHANGED (refresh_and_compact_store counts the retired rows its
+    # upsert rewrite drops; store state identical):
+    "refresh_compact_cycle", "index_compact",
+    # CHANGED closure only (no plan change at the pinned width):
+    # partitioning.widen(), fuzzy.py's probe exchange and the rank /
+    # quantile bucket counts take shuffle_width() instead of the core
+    # count, so plans no longer carry the host's width; shuffle_width
+    # and streaming default_state_partitions reject values below 1.
+    "approx_quantiles", "ccnet_ppl_buckets", "containment_join",
     "dedup_cluster_examples", "dedup_components", "dedup_keep_best",
-    "dedup_pair_audit_sample", "index_compact", "near_dup_cluster_stats",
-    "near_dup_cross_source", "novelty_by_source", "refresh_compact_cycle",
-    "shingle_df_histogram",
+    "dedup_pair_audit_sample", "dup_ngram_fraction", "embed_text",
+    "jaccard_topk_per_doc", "media_decode_dispatch",
+    "media_quality_gate", "media_quality_gate_multiformat", "median_agg",
+    "median_impute", "minhash_dedup", "minhash_refresh",
+    "multimodal_bmp_rle_stats", "multimodal_gif_interlaced_stats",
+    "multimodal_gif_stats", "multimodal_jpeg_411_stats",
+    "multimodal_jpeg_420_stats", "multimodal_jpeg_422_stats",
+    "multimodal_jpeg_color_stats", "multimodal_jpeg_progressive_stats",
+    "multimodal_jpeg_stats", "multimodal_png_interlaced_stats",
+    "multimodal_png_stats", "near_dup_cluster_stats",
+    "near_dup_cross_source", "ngram_jaccard", "ngram_jaccard_prefix",
+    "novelty_by_source", "percentile_cont_exact", "quality_gate",
+    "quartile_agg", "shingle_df_histogram", "simhash_dedup",
+    "simhash_hamming_dedup", "stream_dedup", "stream_embed",
+    "stream_event_alert", "stream_hop_window", "stream_media_decode",
+    "stream_media_dispatch", "stream_minhash_probe",
+    "stream_quality_filter", "stream_session_window", "stream_sessionize",
+    "stream_static_join", "stream_stream_join", "stream_window_agg",
+    "value_outlier_iqr",
     # ROTATION (VERDICT r16 list #6). Oldest first per
-    # tools/rotation.py; the r16 head keys above this round's changed
-    # set all carry fresh r16 driver rows and rotate out. The changed
-    # head is 39 keys, so the 50-key driver window reaches ~11 rows
-    # into this tail; the r10 cohort remainder is listed in full
-    # (14 of its 38 keys already sit in the changed head — the dedup-
-    # closure and quantile groups do double duty), then the r11
-    # remainder for whatever width the window actually has. Plans
-    # unchanged — the drift gate pins them.
+    # tools/rotation.py. The changed head above is 71 keys, wider than
+    # the 50-key driver window, so this tail is reached only by a wider
+    # window: the r10 cohort remainder in full, then the r11 remainder.
+    # Plans unchanged — the drift gate pins them.
     # r10 (complete remainder, alphabetical = registry order):
     "array_funcs", "boilerplate_ngrams", "case_when", "chunk_docs",
-    "collect_agg", "corpus_refresh_cycle", "correlated_subquery",
-    "date_funcs", "decontaminate", "dup_ngram_fraction",
+    "collect_agg", "correlated_subquery", "date_funcs", "decontaminate",
     "dup_paragraph_fraction", "dup_paragraph_removal", "explode_tokens",
     "minhash_band_recall", "minhash_jaccard_estimate",
     "minhash_threshold_sweep", "multimodal_magic_audit",
@@ -113,8 +94,8 @@ _CHECK_FIRST = [
     "argmax_agg", "cdc_upsert", "embedding_drift", "entropy_score",
     "event_gap_stats", "funnel_stages", "gopher_quality_gate",
     "grouped_agg_udaf", "histogram_fixed_bins", "hll_union_rollup",
-    "incremental_dedup", "ivfpq_topk", "json_scan", "label_centroids",
-    "like_filter", "map_funcs", "mode_agg", "multimodal_wav_stats",
+    "incremental_dedup", "json_scan", "label_centroids", "like_filter",
+    "map_funcs", "mode_agg", "multimodal_wav_stats",
     "normalize_text", "ntile_bands", "null_funcs", "orders_rfm",
     "pack_sequences", "partitioned_sink", "pii_redact", "pivot_table",
     "regex_funcs", "salted_join", "schema_evolution",

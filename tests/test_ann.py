@@ -54,3 +54,41 @@ def test_ivf_kmeans_recall_beats_probe_budget(spark):
     idx2, cents2 = ANN.build_ivf_index_kmeans(emb, n_cells=16, seed=7)
     got2 = ANN.ivf_search_kmeans(idx2, cents2, QUERY_VEC, k=10, nprobe=8).collect()
     assert [r.vec_id for r in got] == [r.vec_id for r in got2]
+
+
+def test_lsh_search_materialized_equals_lsh_search(spark, tmp_path):
+    """The on-disk bucket-partitioned index answers exactly what the
+    in-memory index does: same ids, same distances, same order."""
+    emb = load_table(spark, SF_CORRECTNESS, "embeddings")
+    path = str(tmp_path / "lsh")
+    ANN.materialize_lsh_index(emb, path)
+    idx = ANN.build_lsh_index(emb)
+    for k in (1, 3, 10):
+        want = [tuple(r) for r in ANN.lsh_search(idx, QUERY_VEC, k=k)
+                .collect()]
+        got = [tuple(r) for r in
+               ANN.lsh_search_materialized(spark, path, QUERY_VEC, k=k)
+               .collect()]
+        assert want and got == want, (k, got, want)
+
+
+def test_ivf_search_materialized_equals_ivf_search(spark, tmp_path):
+    """Driver-side probe choice over the `_centroids` sidecar picks the
+    same cells as the engine-side probe top-k, and the exact search
+    inside them returns the same rows. With k = |corpus| every
+    candidate comes back, so the cid set IS the probe set."""
+    emb = load_table(spark, SF_CORRECTNESS, "embeddings")
+    path = str(tmp_path / "ivf")
+    ANN.materialize_ivf_index(emb, path, n_cells=16)
+    n = emb.count()
+    for nprobe in (1, 3):
+        for k in (5, n):
+            want = [tuple(r) for r in
+                    ANN.ivf_search(emb, QUERY_VEC, k=k, n_cells=16,
+                                   nprobe=nprobe).collect()]
+            got = [tuple(r) for r in
+                   ANN.ivf_search_materialized(spark, path, QUERY_VEC, k=k,
+                                               n_cells=16, nprobe=nprobe)
+                   .collect()]
+            assert want and got == want, (nprobe, k)
+        assert len({cid for _id, cid, _d in want}) == nprobe

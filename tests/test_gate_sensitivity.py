@@ -221,3 +221,30 @@ def test_registered_oracles_are_sign_normalized():
     for name, sql in ORACLES.items():
         bad = [m.start() for m in unwrapped.finditer(sql)]
         assert not bad, f"{name}: raw round( at offsets {bad}"
+
+
+def test_plan_gate_is_width_independent_and_still_catches_changes(spark):
+    """The plan-drift gate (tests/test_plan_manifest.py) must not
+    depend on the host's core count, yet must still fail a real plan
+    change. widen() targets the configured shuffle width — pinned at
+    8 by both the manifest tool and the test session — never the
+    executor core count, so the widened key's plan and fingerprint
+    equal the manifest's at any SPARK_GRAFT_CPUS; the same key built
+    at another width is a different plan, and its fingerprint leaves
+    the manifest."""
+    from tools.plan_manifest import fingerprint_one, load_manifest, plan_text
+    from tripgogo_vector_search_spark.partitioning import shuffle_width
+
+    key, conf = "corpus_filter", "spark.sql.shuffle.partitions"
+    want = load_manifest()[key]
+    width = shuffle_width(spark)
+    plan = plan_text(spark, key)
+    assert f"Repartition {width}, true" in plan
+    assert fingerprint_one(spark, key, plan=plan) == want
+    spark.conf.set(conf, str(width + 3))
+    try:
+        changed = plan_text(spark, key)
+    finally:
+        spark.conf.set(conf, str(width))
+    assert f"Repartition {width + 3}, true" in changed
+    assert fingerprint_one(spark, key, plan=changed) != want

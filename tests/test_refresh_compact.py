@@ -109,6 +109,40 @@ def test_refresh_and_compact_full_contract(spark, tmp_path):
     assert _file_state(path) == state
 
 
+def test_retired_row_in_an_upserted_partition_is_counted(spark, tmp_path):
+    """A retired id whose partition ALSO receives a new doc: the upsert
+    rewrites that partition from fresh + carried rows, which drops the
+    retired row before compaction runs. It must still be evicted AND
+    counted."""
+    path = str(tmp_path / "store")
+    # store: ids 0..127 except 60 (ranges 0, 1)
+    (spark.range(128).filter(F.col("id") != 60)
+     .select(F.col("id").alias("doc_id"),
+             F.concat(F.lit("fp_"), F.col("id")).alias("fp"),
+             F.array(F.col("id").cast("double"), F.lit(-1.0)).alias("v"),
+             F.floor(F.col("id") / W).alias("id_range"))
+     .write.mode("overwrite").partitionBy("id_range").parquet(path))
+    before = _file_state(path)
+    # current: id 5 retired, id 60 new — both in range 0
+    current = (spark.range(128).filter(F.col("id") != 5)
+               .select(F.col("id").alias("doc_id"),
+                       F.concat(F.lit("fp_"), F.col("id")).alias("fp"),
+                       F.col("id").cast("string").alias("text")))
+    stats = refresh_and_compact_store(spark, path, current, _embed,
+                                      range_width=W)
+    # counted as evicted; range 0 was rewritten once, by the upsert,
+    # so compaction affected no partition
+    assert stats == {"upserted_partitions": 1, "evicted_rows": 1,
+                     "affected_partitions": 0, "removed_partitions": 0}
+    after = _file_state(path)
+    for rel, st in before.items():
+        if rel.startswith("id_range=1/"):
+            assert after.get(rel) == st, rel
+    ids = {r[0] for r in spark.read.parquet(path).select("doc_id")
+           .collect()}
+    assert ids == set(range(128)) - {5}
+
+
 def test_refresh_and_compact_leaves_nothing_cached(spark, tmp_path):
     """Delta-based cache/block hygiene, matching the compaction test:
     the composed run must add neither cache entries nor stored RDD

@@ -10,7 +10,8 @@
    result DataFrame is no longer referenced; a still-held result is
    never broken.
 3. partitioning.shuffle_width falls back to defaultParallelism when
-   ``spark.sql.shuffle.partitions`` is non-numeric (ADVICE r16 #2).
+   ``spark.sql.shuffle.partitions`` is non-numeric (ADVICE r16 #2) or
+   below 1.
 """
 
 from __future__ import annotations
@@ -141,15 +142,23 @@ def test_shuffle_width_falls_back_on_non_numeric_conf(spark):
         spark.conf.get("spark.sql.shuffle.partitions"))
 
     class _Conf:
-        @staticmethod
-        def get(key):
-            return "auto"
+        def __init__(self, value):
+            self._v = value
+
+        def get(self, key):
+            assert key == "spark.sql.shuffle.partitions", key
+            return self._v
 
     class _Stub:
-        conf = _Conf()
-        sparkContext = spark.sparkContext
+        def __init__(self, value):
+            self.conf = _Conf(value)
+            self.sparkContext = spark.sparkContext
 
-    assert shuffle_width(_Stub()) == spark.sparkContext.defaultParallelism
+    # non-numeric and below-1 widths are invalid: fall back
+    for bad in ("auto", "0", "-3"):
+        assert shuffle_width(_Stub(bad)) == \
+            spark.sparkContext.defaultParallelism, bad
+    assert shuffle_width(_Stub("5")) == 5
 
 
 @pytest.mark.parametrize("key", ["median_agg", "value_outlier_iqr"])
@@ -167,8 +176,8 @@ def test_state_partitions_resolve_from_conf(spark):
     spark.tripgogo.stream.statePartitions (VERDICT r16 #3: scale-
     dependent sizing must be conf-settable, not a baked-in literal),
     keeps the measured fixture default 8 when unset, and falls back
-    rather than raises on a non-numeric value (same policy as
-    partitioning.shuffle_width)."""
+    rather than raises on a non-numeric or below-1 value (same policy
+    as partitioning.shuffle_width)."""
     from tripgogo_vector_search_spark.streaming.ingest import (
         default_state_partitions)
 
@@ -177,7 +186,11 @@ def test_state_partitions_resolve_from_conf(spark):
             self._v = value
 
         def get(self, key, default=None):
-            return self._v if self._v is not None else default
+            # answers only for the key under test, like a real conf
+            if key == "spark.tripgogo.stream.statePartitions" \
+                    and self._v is not None:
+                return self._v
+            return default
 
     class _Spark:
         def __init__(self, value):
@@ -186,6 +199,9 @@ def test_state_partitions_resolve_from_conf(spark):
     assert default_state_partitions(_Spark(None)) == 8
     assert default_state_partitions(_Spark("24")) == 24
     assert default_state_partitions(_Spark("auto")) == 8
+    assert default_state_partitions(_Spark("0")) == 8
+    assert default_state_partitions(_Spark("-2")) == 8
+    assert default_state_partitions(_Spark("1")) == 1
     assert default_state_partitions(spark) == 8  # real session, unset
 
 

@@ -74,6 +74,50 @@ def test_knn_k_equals_n_is_full_sort(spark):
     assert [r.vec_id for r in full] == [r.vec_id for r in srt]
 
 
+def test_driver_cosine_equals_engine_fold_bitwise(spark):
+    """The one driver-side cosine (the IVF probe choice) and the
+    constant-query distance knn_topk uses are the engine's fold, double
+    for double: against `cosine_distance` on random pairs and on the
+    fixture's seed centroids vs the flagship query; and on a zero-norm
+    side, NaN where the engines' try_divide form is NULL (the plain
+    column form raises under ANSI, so it cannot rank one)."""
+    import numpy as np
+
+    from tripgogo_vector_search_spark.operators.knn import with_distance
+    from tripgogo_vector_search_spark.operators.simjoin import (
+        _fold_distances)
+    from tripgogo_vector_search_spark.plans.flagship import QUERY_VEC
+
+    rows = _df(spark).filter(F.col("id") < 40).select(
+        "id", V.cosine_distance("a", "b").alias("d")).collect()
+    got = {r["id"]: r["d"] for r in rows}
+    for i, a, b in _vecs()[:40]:
+        assert V._py_cosine_distance(a, b) == got[i], i
+        assert V._py_cosine_distance(b, a) == got[i], i
+
+    emb = load_table(spark, SF_CORRECTNESS, "embeddings").filter(
+        F.col("vec_id") < 16)
+    rows = (with_distance(emb, QUERY_VEC, dist_col="hoisted")
+            .select("embedding", "hoisted",
+                    V.cosine_distance("embedding", V.vector_lit(QUERY_VEC))
+                    .alias("col")).collect())
+    assert len(rows) == 16
+    for r in rows:
+        assert r["hoisted"] == r["col"]
+        assert V._py_cosine_distance(r["embedding"], QUERY_VEC) == r["col"]
+
+    zero = [0.0] * DIM
+    a = _vecs()[0][1]
+    z = spark.createDataFrame([(zero, a), (a, zero), (zero, zero)],
+                              "a array<double>, b array<double>")
+    engine = z.select((F.lit(1.0) - F.try_divide(
+        V.dot("a", "b"), V.l2_norm("a") * V.l2_norm("b"))).alias("d"))
+    assert [r["d"] for r in engine.collect()] == [None, None, None]
+    for u, v in ((zero, a), (a, zero), (zero, zero)):
+        assert math.isnan(V._py_cosine_distance(u, v))
+        assert np.isnan(_fold_distances(np.array([u]), np.array([v]))[0, 0])
+
+
 def test_to_vector_roundtrip_and_dim_check(spark):
     df = spark.createDataFrame(
         [("[1.5, -2.0, 3.25]",), ("[]",), ("[1.0,2.0]",)], "s string")

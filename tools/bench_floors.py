@@ -41,8 +41,9 @@ def main() -> None:
         "round": rnd,
         "n_samples": len(paths),
         "samples": [os.path.basename(p) for p in paths],
-        "noise_floor_sec": min(n for n in noise if n is not None),
-        "io_floor_sec": min(n for n in io if n is not None),
+        "noise_floor_sec": min((n for n in noise if n is not None),
+                               default=None),
+        "io_floor_sec": min((n for n in io if n is not None), default=None),
         "total_of_floors": round(sum(floors.values()), 3),
         "floors": {k: floors[k] for k in sorted(floors)},
     }

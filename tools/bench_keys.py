@@ -1,11 +1,12 @@
-"""Round-16 measurement harness: time a subset of bench keys (min-of-N,
-same actions as bench.py) and/or capture formatted plans to plans/r16/.
+"""Measurement harness: time a subset of bench keys (min-of-N, same
+actions as bench.py) and/or capture their formatted plans.
 
-    python tools/r16_bench.py --keys a,b,c [--n 3] [--sf DIR] [--plans before]
-    python tools/r16_bench.py --all [--n 3]            # every bench.py key
+    python tools/bench_keys.py --keys a,b,c [--n 3] [--sf DIR] \
+        [--plans before --plans-dir plans/r18]
+    python tools/bench_keys.py --all [--n 3]           # every bench.py key
 
 Prints one JSON line {key: floor_sec} so runs can be diffed. Plans land
-at plans/r16/<key>_<tag>.txt when --plans <tag> is given.
+at <plans-dir>/<key>_<tag>.txt when --plans <tag> is given.
 """
 
 from __future__ import annotations
@@ -30,6 +31,8 @@ def main() -> None:
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--plans", default="",
                     help="tag: capture explain('formatted') per key")
+    ap.add_argument("--plans-dir", default="plans",
+                    help="directory the --plans captures are written to")
     ap.add_argument("--no-time", action="store_true",
                     help="plans only, skip timing")
     args = ap.parse_args()
@@ -51,7 +54,7 @@ def main() -> None:
         if k not in QUERIES:
             raise SystemExit(f"unknown query {k!r}")
 
-    spark = get_spark("r16-bench")
+    spark = get_spark("bench-keys")
     spark.sparkContext.setLogLevel("ERROR")
     # same warmup as bench.py
     QUERIES["knn_topk"](spark, args.sf).collect()
@@ -64,15 +67,16 @@ def main() -> None:
      .format("noop").mode("overwrite").save())
 
     if args.plans:
-        os.makedirs("plans/r16", exist_ok=True)
+        os.makedirs(args.plans_dir, exist_ok=True)
         for k in keys:
             df = QUERIES[k](spark, args.sf)
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
-            with open(f"plans/r16/{k}_{args.plans}.txt", "w") as fh:
+            dest = os.path.join(args.plans_dir, f"{k}_{args.plans}.txt")
+            with open(dest, "w") as fh:
                 fh.write(buf.getvalue())
-            print(f"plan -> plans/r16/{k}_{args.plans}.txt", file=sys.stderr)
+            print(f"plan -> {dest}", file=sys.stderr)
 
     if args.no_time:
         return
@@ -81,7 +85,7 @@ def main() -> None:
     for rep in range(args.n):
         for k in keys:
             action = actions.get(k, "noop")
-            spark.sparkContext.setJobDescription(f"r16 {k} rep{rep}")
+            spark.sparkContext.setJobDescription(f"{k} rep{rep}")
             t0 = time.perf_counter()
             df = QUERIES[k](spark, args.sf)
             if action == "collect":

@@ -209,9 +209,10 @@ def load_manifest() -> dict[str, str]:
 
 
 def _session():
-    # Pin the exact shape conftest uses: plan fingerprints include
-    # parallelism-derived constants (partitioning.widen), so manifest
-    # generation and the test must agree on the session config.
+    # Pin the exact shape conftest uses: plan fingerprints include the
+    # shuffle width (partitioning.widen targets it), so manifest
+    # generation and the test must agree on it. The core count enters
+    # no plan, so any SPARK_GRAFT_CPUS gives the same fingerprints.
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     from tripgogo_vector_search_spark.session import get_spark
     return get_spark("plan-manifest", shuffle_partitions=8)
@@ -223,7 +224,7 @@ def main(argv: list[str]) -> int:
     got = fingerprint_all(spark)
     if update:
         with open(MANIFEST, "w") as f:
-            json.dump({"sf_dir": SF_SMOKE, "session": "local[8]/shuffle=8",
+            json.dump({"sf_dir": SF_SMOKE, "session": "shuffle=8",
                        "fingerprints": got}, f, indent=1, sort_keys=True)
             f.write("\n")
         print(f"wrote {len(got)} fingerprints to {MANIFEST}")

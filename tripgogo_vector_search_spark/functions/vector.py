@@ -89,6 +89,27 @@ def cosine_distance(a: ColumnOrName, b: ColumnOrName) -> Column:
     return F.lit(1.0) - cosine_similarity(a, b)
 
 
+def py_dot(a: Sequence[float], b: Sequence[float]) -> float:
+    """Driver-side :func:`dot`: the same left-to-right double fold
+    (an explicit loop — ``sum()`` compensates float rounding on Python
+    3.12+)."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + float(x) * float(y)
+    return acc
+
+
+def _py_cosine_distance(a: Sequence[float], b: Sequence[float]) -> float:
+    """Driver-side :func:`cosine_distance` for choosing IVF probe cells:
+    the same folds and operation order, so every double equals the
+    engine's bit for bit. A zero-norm side gives NaN, the IEEE
+    ``1 - 0/0`` the numpy kernels compute and the NULL of the engines'
+    ``try_divide`` form (operators/simjoin.py)."""
+    import math
+    den = math.sqrt(py_dot(a, a)) * math.sqrt(py_dot(b, b))
+    return 1.0 - py_dot(a, b) / den if den else math.nan
+
+
 def euclidean_distance(a: ColumnOrName, b: ColumnOrName) -> Column:
     diffs = F.zip_with(_c(a), _c(b),
                        lambda x, y: (x.cast("double") - y.cast("double"))

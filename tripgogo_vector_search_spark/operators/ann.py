@@ -19,6 +19,10 @@ buckets instead of scanning the corpus.
 
 Hyperplanes are generated from a fixed closed-form (sin-based) sequence
 rounded to 6 dp, so the exact same literals are embeddable in oracle SQL.
+
+Every single-query search here prunes to candidate rows, then hands
+them to the one exact top-k (operators/knn.py:knn_topk); driver-side
+probe choice over a bounded centroid list is :func:`_nearest_cells`.
 """
 
 from __future__ import annotations
@@ -28,7 +32,9 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
-from ..functions.vector import cosine_distance, dot, vector_lit
+from ..functions.vector import (_py_cosine_distance, cosine_distance, dot,
+                                l2_norm, py_dot, vector_lit)
+from .knn import knn_topk
 
 DEFAULT_PLANES = 8
 
@@ -40,10 +46,6 @@ def lsh_planes(n_planes: int = DEFAULT_PLANES, dim: int = 64) -> list[list[float
         [round(math.sin(0.731 * (p * dim + i + 1)), 6) for i in range(dim)]
         for p in range(n_planes)
     ]
-
-
-def py_dot(a: Sequence[float], b: Sequence[float]) -> float:
-    return sum(x * y for x, y in zip(a, b))
 
 
 def lsh_bucket_expr(vec_col: str, planes: list[list[float]]) -> Column:
@@ -70,19 +72,42 @@ def build_lsh_index(corpus: DataFrame, vec_col: str = "embedding",
     return corpus.withColumn("bucket", lsh_bucket_expr(vec_col, planes))
 
 
+def _exact_topk(cand: DataFrame, query_vec: Sequence[float], k: int,
+                vec_col: str, id_col: str, *cols) -> DataFrame:
+    """Exact top-k over the candidate rows a search pruned to, ties
+    broken by id, distances rounded to 6 dp; ``cols`` ride along."""
+    return (knn_topk(cand, query_vec, k, vec_col, tiebreak=id_col)
+            .select(id_col, *cols,
+                    F.round("distance_score", 6).alias("distance_score")))
+
+
+def _nearest_cells(query_vec: Sequence[float], cells, nprobe: int) -> list:
+    """Driver-side probe choice over a bounded list of ``(cid, centroid)``
+    pairs: the ``nprobe`` cell ids nearest the query by (cosine distance,
+    cid). A zero-norm side has no distance (NaN); it ranks last, as the
+    oracles' NULLS LAST does."""
+    def key(cell):
+        d = _py_cosine_distance(cell[1], query_vec)
+        return (math.isnan(d), 0.0 if math.isnan(d) else d, cell[0])
+    return [cid for cid, _ in sorted(cells, key=key)[:nprobe]]
+
+
+def _seed_centroids(corpus: DataFrame, vec_col: str, id_col: str,
+                    n_cells: int) -> DataFrame:
+    """Seed-sampled IVF centroids ``(cid, cvec)``: the ``n_cells``
+    smallest-id vectors."""
+    return (corpus.filter(F.col(id_col) < n_cells)
+            .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec")))
+
+
 def lsh_search(index: DataFrame, query_vec: Sequence[float], k: int = 3,
                vec_col: str = "embedding", id_col: str = "vec_id",
                planes: list[list[float]] | None = None) -> DataFrame:
     """Search the query's bucket only (single-probe). The bucket equality
     filter is a plain predicate — pushed down to the partitioned index."""
     planes = planes or lsh_planes()
-    qbucket = py_lsh_bucket(query_vec, planes)
-    cand = index.filter(F.col("bucket") == qbucket)
-    scored = cand.withColumn(
-        "distance_score", cosine_distance(F.col(vec_col), vector_lit(query_vec)))
-    return (scored.orderBy(F.col("distance_score").asc(), F.col(id_col).asc())
-            .limit(k)
-            .select(id_col, F.round("distance_score", 6).alias("distance_score")))
+    cand = index.filter(F.col("bucket") == py_lsh_bucket(query_vec, planes))
+    return _exact_topk(cand, query_vec, k, vec_col, id_col)
 
 
 def materialize_lsh_index(corpus: DataFrame, path: str,
@@ -103,14 +128,8 @@ def lsh_search_materialized(spark, path: str, query_vec: Sequence[float],
     """Single-probe search against a bucket-partitioned on-disk index:
     the bucket equality predicate prunes to one partition directory, so
     the scan reads 1/2^n_planes of the corpus without touching the rest."""
-    planes = planes or lsh_planes()
-    qbucket = py_lsh_bucket(query_vec, planes)
-    cand = spark.read.parquet(path).filter(F.col("bucket") == qbucket)
-    scored = cand.withColumn(
-        "distance_score", cosine_distance(F.col(vec_col), vector_lit(query_vec)))
-    return (scored.orderBy(F.col("distance_score").asc(), F.col(id_col).asc())
-            .limit(k)
-            .select(id_col, F.round("distance_score", 6).alias("distance_score")))
+    return lsh_search(spark.read.parquet(path), query_vec, k, vec_col,
+                      id_col, planes)
 
 
 def materialize_ivf_index(corpus: DataFrame, path: str,
@@ -125,8 +144,7 @@ def materialize_ivf_index(corpus: DataFrame, path: str,
     import os
     (build_ivf_index(corpus, vec_col, id_col, n_cells)
      .write.mode("overwrite").partitionBy("cid").parquet(path))
-    (corpus.filter(F.col(id_col) < n_cells)
-     .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
+    (_seed_centroids(corpus, vec_col, id_col, n_cells)
      .coalesce(1)
      .write.mode("overwrite").parquet(os.path.join(path, "_centroids")))
 
@@ -141,23 +159,13 @@ def ivf_search_materialized(spark, path: str,
     statically — no job touches the unprobed cells."""
     import os
     cents = spark.read.parquet(os.path.join(path, "_centroids")).collect()
-
-    def cos_dist(a: Sequence[float], b: Sequence[float]) -> float:
-        na = math.sqrt(py_dot(a, a)) or 1.0
-        nb = math.sqrt(py_dot(b, b)) or 1.0
-        return 1.0 - py_dot(a, b) / (na * nb)
-
-    order = sorted(cents, key=lambda r: (cos_dist(r.cvec, query_vec), r.cid))
-    probes = [r.cid for r in order[:nprobe]]
+    probes = _nearest_cells(query_vec, [(r.cid, r.cvec) for r in cents],
+                            nprobe)
     cand = spark.read.parquet(path).filter(F.col("cid").isin(probes))
-    scored = cand.withColumn(
-        "distance_score", cosine_distance(F.col(vec_col), vector_lit(query_vec)))
-    return (scored.orderBy(F.col("distance_score").asc(), F.col(id_col).asc())
-            .limit(k)
-            # partition-column type inference reads cid back as int;
-            # restore the builder's bigint so the result schema is stable
-            .select(id_col, F.col("cid").cast("bigint").alias("cid"),
-                    F.round("distance_score", 6).alias("distance_score")))
+    # partition-column type inference reads cid back as int; restore
+    # the builder's bigint so the result schema is stable
+    return _exact_topk(cand, query_vec, k, vec_col, id_col,
+                       F.col("cid").cast("bigint").alias("cid"))
 
 
 def ivf_knn_join_materialized(spark, path: str, queries: DataFrame,
@@ -202,10 +210,8 @@ def build_ivf_index(corpus: DataFrame, vec_col: str = "embedding",
     """Assign every vector to its nearest centroid (deterministic argmin:
     distance then centroid id). Centroids = the `n_cells` smallest-id
     vectors — swap in k-means centroids for production quality."""
-    from ..functions.vector import dot, l2_norm
-    cents = (corpus.filter(F.col(id_col) < n_cells)
-             .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"),
-                     l2_norm(vec_col).alias("cnorm")))
+    cents = (_seed_centroids(corpus, vec_col, id_col, n_cells)
+             .withColumn("cnorm", l2_norm("cvec")))
     scored = (corpus.withColumn("vnorm", l2_norm(vec_col))
               .crossJoin(F.broadcast(cents))
               .withColumn("cdist",
@@ -224,18 +230,11 @@ def ivf_search(corpus: DataFrame, query_vec: Sequence[float], k: int = 3,
     those cells. At scale the index is written partitioned by `cid`, so
     this reads nprobe/n_cells of the data."""
     index = build_ivf_index(corpus, vec_col, id_col, n_cells)
-    cents = (corpus.filter(F.col(id_col) < n_cells)
-             .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec")))
-    probes = (cents.withColumn("qdist", cosine_distance(F.col("cvec"),
-                                                        vector_lit(query_vec)))
-              .orderBy(F.col("qdist").asc(), F.col("cid").asc())
-              .limit(nprobe).select("cid"))
+    probes = knn_topk(_seed_centroids(corpus, vec_col, id_col, n_cells),
+                      query_vec, nprobe, "cvec", "qdist",
+                      tiebreak="cid").select("cid")
     cand = index.join(F.broadcast(probes), "cid")
-    scored = cand.withColumn(
-        "distance_score", cosine_distance(F.col(vec_col), vector_lit(query_vec)))
-    return (scored.orderBy(F.col("distance_score").asc(), F.col(id_col).asc())
-            .limit(k)
-            .select(id_col, "cid", F.round("distance_score", 6).alias("distance_score")))
+    return _exact_topk(cand, query_vec, k, vec_col, id_col, "cid")
 
 
 def build_ivf_index_kmeans(corpus: DataFrame, vec_col: str = "embedding",
@@ -264,17 +263,6 @@ def ivf_search_kmeans(index: DataFrame, centroids: list[list[float]],
     """Probe the `nprobe` nearest KMeans cells (driver-side argsort over
     n_cells centroids — tiny), exact-search inside them. Reads
     nprobe/n_cells of a cid-partitioned index."""
-    def cos_dist(a: Sequence[float], b: Sequence[float]) -> float:
-        na = math.sqrt(py_dot(a, a)) or 1.0
-        nb = math.sqrt(py_dot(b, b)) or 1.0
-        return 1.0 - py_dot(a, b) / (na * nb)
-
-    order = sorted(range(len(centroids)),
-                   key=lambda c: (cos_dist(query_vec, centroids[c]), c))
-    probes = order[:nprobe]
+    probes = _nearest_cells(query_vec, enumerate(centroids), nprobe)
     cand = index.filter(F.col("cid").isin(probes))
-    scored = cand.withColumn(
-        "distance_score", cosine_distance(F.col(vec_col), vector_lit(query_vec)))
-    return (scored.orderBy(F.col("distance_score").asc(), F.col(id_col).asc())
-            .limit(k)
-            .select(id_col, "cid", F.round("distance_score", 6).alias("distance_score")))
+    return _exact_topk(cand, query_vec, k, vec_col, id_col, "cid")

@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..partitioning import shuffle_width
+
 
 def _fuzzy_projection(df: DataFrame, id_col: str, name_col: str,
                       max_dist: int) -> DataFrame:
@@ -45,7 +47,7 @@ def _fuzzy_sides(df: DataFrame, id_col: str, name_col: str,
     p = _fuzzy_projection(df, id_col, name_col, max_dist)
     a = (p.withColumn("probe", F.explode(F.array(
              F.col("bkt") - 1, F.col("bkt"), F.col("bkt") + 1)))
-         .repartition(df.sparkSession.sparkContext.defaultParallelism)
+         .repartition(shuffle_width(df.sparkSession))
          .alias("a"))
     return a, p.alias("b")
 

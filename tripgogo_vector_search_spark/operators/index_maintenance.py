@@ -79,20 +79,40 @@ def compact_partitioned_store(spark: SparkSession, path: str,
     files are deleted through the Hadoop ``FileSystem`` API as soon as
     the write lands (same release discipline as the CC loop,
     operators/dedup.py:_release_checkpoint)."""
-    store = spark.read.parquet(path)
-    evict = (store.select(id_col, part_col)
+    by_range = _retired_by_range(spark, path, current_ids, id_col, part_col)
+    return {"evicted_rows": int(sum(by_range.values())),
+            "affected_partitions": len(by_range),
+            "removed_partitions": _evict_ranges(
+                spark, path, current_ids, set(by_range), id_col, part_col,
+                durable)}
+
+
+def _retired_by_range(spark: SparkSession, path: str,
+                      current_ids: DataFrame, id_col: str,
+                      part_col: str) -> dict:
+    """``{partition: n}`` of stored rows whose id is absent from
+    ``current_ids`` — one scan of the store's id column. The frame is
+    bounded by construction (ranges of one retirement batch);
+    collecting it is a metadata op the explicit directory removal
+    needs anyway."""
+    evict = (spark.read.parquet(path).select(id_col, part_col)
              .join(current_ids.select(id_col), id_col, "left_anti"))
-    # the affected-range frame is bounded by construction (ranges of
-    # one retirement batch); collecting it is a metadata op that the
-    # explicit directory removal below needs anyway
-    by_range = {r[part_col]: r["n"] for r in
-                evict.groupBy(part_col).agg(F.count(F.lit(1)).alias("n"))
-                .collect()}
-    if not by_range:
-        return {"evicted_rows": 0, "affected_partitions": 0,
-                "removed_partitions": 0}
+    return {r[part_col]: r["n"] for r in
+            evict.groupBy(part_col).agg(F.count(F.lit(1)).alias("n"))
+            .collect()}
+
+
+def _evict_ranges(spark: SparkSession, path: str, current_ids: DataFrame,
+                  ranges: set, id_col: str, part_col: str,
+                  durable: bool) -> int:
+    """Rewrite the ``ranges`` partitions without their rows absent from
+    ``current_ids``; returns the number of partition directories
+    removed because no row of theirs survived."""
+    if not ranges:
+        return 0
+    store = spark.read.parquet(path)
     affected = spark.createDataFrame(
-        [(k,) for k in sorted(by_range)], f"{part_col} bigint")
+        [(k,) for k in sorted(ranges)], f"{part_col} bigint")
     # broadcast the bounded range frame -> dynamic partition pruning
     # keeps the survivor scan off every unaffected partition
     survivors = _checkpoint(
@@ -120,7 +140,7 @@ def compact_partitioned_store(spark: SparkSession, path: str,
                    for st in fs.listStatus(hpath)
                    if st.isDirectory()
                    and st.getPath().getName().startswith(part_prefix)}
-        if on_disk <= {f"{part_col}={r}" for r in by_range}:
+        if on_disk <= {f"{part_col}={r}" for r in ranges}:
             _release_checkpoint(survivors, durable)  # (empty, hygienic)
             raise ValueError(
                 "compact_partitioned_store: the evict set covers every "
@@ -142,7 +162,7 @@ def compact_partitioned_store(spark: SparkSession, path: str,
             spark.conf.set(mode_key, prev)
         _release_checkpoint(survivors, durable)
     removed = 0
-    fully_retired = sorted(set(by_range) - surviving_ranges)
+    fully_retired = sorted(ranges - surviving_ranges)
     if fully_retired:
         # fully-retired partitions: dynamic overwrite wrote no rows for
         # them, so their stale files must go explicitly — through the
@@ -156,9 +176,7 @@ def compact_partitioned_store(spark: SparkSession, path: str,
                     fs.getFileStatus(part_dir).isDirectory():
                 fs.delete(part_dir, True)  # recursive
                 removed += 1
-    return {"evicted_rows": int(sum(by_range.values())),
-            "affected_partitions": len(by_range),
-            "removed_partitions": removed}
+    return removed
 
 
 def upsert_partitioned_store(spark: SparkSession, path: str,
@@ -185,12 +203,19 @@ def upsert_partitioned_store(spark: SparkSession, path: str,
     surviving executor loss mid-write — VERDICT r10 "What's wrong
     #4"), released through the Hadoop ``FileSystem`` API after the
     write. Returns the number of partitions written."""
+    return len(_upsert(spark, path, rows, part_col, durable))
+
+
+def _upsert(spark: SparkSession, path: str, rows: DataFrame,
+            part_col: str, durable: bool) -> set:
+    """:func:`upsert_partitioned_store`, returning the set of partition
+    values written (bounded: the delta's partition spread)."""
     surv = _checkpoint(rows, durable)
     mode_key = "spark.sql.sources.partitionOverwriteMode"
     prev = spark.conf.get(mode_key, None)
     try:
-        n_parts = surv.select(part_col).distinct().count()
-        if n_parts:
+        written = {r[0] for r in surv.select(part_col).distinct().collect()}
+        if written:
             spark.conf.set(mode_key, "dynamic")
             (surv.write.mode("overwrite")
              .partitionBy(part_col).parquet(path))
@@ -200,7 +225,7 @@ def upsert_partitioned_store(spark: SparkSession, path: str,
         else:
             spark.conf.set(mode_key, prev)
         _release_checkpoint(surv, durable)
-    return n_parts
+    return written
 
 
 def refresh_and_compact_store(spark: SparkSession, path: str,
@@ -230,9 +255,14 @@ def refresh_and_compact_store(spark: SparkSession, path: str,
        (:func:`upsert_partitioned_store`); untouched partitions stay
        byte-identical;
     4. COMPACT: retirements (store ids absent from ``current``) are
-       evicted by :func:`compact_partitioned_store` — partial
+       evicted as in :func:`compact_partitioned_store` — partial
        partitions rewritten, fully-retired partition directories
-       removed through the Hadoop FileSystem API.
+       removed through the Hadoop FileSystem API. They are counted
+       BEFORE the upsert: its rewrite of an affected partition from
+       fresh + carried rows already drops that partition's retired
+       rows, which a count taken afterwards would miss. Partitions the
+       upsert rewrote are not rewritten again, and not counted in
+       ``affected_partitions``.
 
     The write cost is |affected partitions|, never |index| — at 100 TB
     the difference between a nightly job and an impossible one. The
@@ -263,10 +293,12 @@ def refresh_and_compact_store(spark: SparkSession, path: str,
                .select(id_col, fp_col, F.col("_s_v").alias(vec_col),
                        F.col("_s_rng").alias(part_col))
                .join(F.broadcast(affected), part_col, "left_semi"))
-    n_up = upsert_partitioned_store(
-        spark, path, fresh.unionByName(carried), part_col=part_col,
-        durable=durable)
-    stats = compact_partitioned_store(
-        spark, path, current.select(id_col),
-        id_col=id_col, part_col=part_col, durable=durable)
-    return {"upserted_partitions": n_up, **stats}
+    retired = _retired_by_range(spark, path, current, id_col, part_col)
+    upserted = _upsert(spark, path, fresh.unionByName(carried), part_col,
+                       durable)
+    compacted = set(retired) - upserted
+    return {"upserted_partitions": len(upserted),
+            "evicted_rows": int(sum(retired.values())),
+            "affected_partitions": len(compacted),
+            "removed_partitions": _evict_ranges(
+                spark, path, current, compacted, id_col, part_col, durable)}

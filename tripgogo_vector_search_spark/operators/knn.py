@@ -19,7 +19,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..functions.vector import cosine_distance, match_score, vector_lit
+from ..functions.vector import (cosine_distance, dot, l2_norm, match_score,
+                                py_dot, vector_lit)
 
 
 def with_distance(df: DataFrame, query_vec: Sequence[float] | Column,
@@ -29,8 +30,7 @@ def with_distance(df: DataFrame, query_vec: Sequence[float] | Column,
         return df.withColumn(dist_col, cosine_distance(F.col(vec_col), query_vec))
     # Constant query: hoist its norm to a Python-computed literal (same
     # sequential double fold, bit-identical) — one fewer 64-dim fold/row.
-    from ..functions.vector import dot, l2_norm
-    qnorm = math.sqrt(sum(float(x) * float(x) for x in query_vec))
+    qnorm = math.sqrt(py_dot(query_vec, query_vec))
     dist = (F.lit(1.0) - dot(F.col(vec_col), vector_lit(query_vec))
             / (l2_norm(F.col(vec_col)) * F.lit(qnorm)))
     return df.withColumn(dist_col, dist)

@@ -16,7 +16,21 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
-from ..functions.vector import cosine_distance
+from ..functions.vector import dot, l2_norm
+
+
+def _rank(scored: DataFrame, k: int) -> DataFrame:
+    """Global top-k per query of ``(query_id, neighbor_id,
+    distance_score)`` candidates: a row_number window with the id
+    tiebreak, NULL distances (zero-norm vectors) last like the
+    oracles' NULLS LAST, distances rounded to 6 dp on output."""
+    w = W.partitionBy("query_id").orderBy(
+        F.col("distance_score").asc_nulls_last(),
+        F.col("neighbor_id").asc())
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "neighbor_id", "rank",
+                    F.round("distance_score", 6).alias("distance_score")))
 
 
 def similarity_join(corpus: DataFrame, queries: DataFrame, k: int = 3,
@@ -25,8 +39,6 @@ def similarity_join(corpus: DataFrame, queries: DataFrame, k: int = 3,
                     exclude_self: bool = True) -> DataFrame:
     """Top-k corpus neighbors per query row by ascending cosine distance;
     deterministic corpus-id tiebreak."""
-    from ..functions.vector import dot, l2_norm
-
     # Precompute each side's norm once per row (not once per pair): the
     # per-pair work drops from three 64-dim folds to one.
     q = queries.select(F.col(query_id).alias("query_id"),
@@ -42,70 +54,40 @@ def similarity_join(corpus: DataFrame, queries: DataFrame, k: int = 3,
     # also exactly what the DuckDB oracle computes for x/0. The
     # nulls_last window then pins the degenerate candidate BELOW every
     # real neighbor, same as the oracle's default NULLS LAST.
-    scored = joined.withColumn(
+    return _rank(joined.withColumn(
         "distance_score",
         F.lit(1.0) - F.try_divide(
             dot("neighbor_vec", "query_vec"),
-            F.col("neighbor_norm") * F.col("query_norm")))
-    w = W.partitionBy("query_id").orderBy(
-        F.col("distance_score").asc_nulls_last(),
-        F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank",
-                    F.round("distance_score", 6).alias("distance_score")))
+            F.col("neighbor_norm") * F.col("query_norm"))), k)
 
 
-def similarity_join_gemm(corpus: DataFrame, queries: DataFrame, k: int = 3,
-                         corpus_vec: str = "embedding",
-                         corpus_id: str = "vec_id",
-                         query_vec: str = "embedding",
-                         query_id: str = "vec_id",
-                         exclude_self: bool = True) -> DataFrame:
-    """Same semantics as :func:`similarity_join`, different physical
-    strategy: the query block is shipped to every corpus partition and
-    each Arrow batch scores against it with one BLAS matrix multiply
-    (``C @ Q.T``), keeping only the partition-local top-k per query;
-    the global top-k reduces the tiny candidate set with a window.
-
-    Per corpus row the expression path folds a 64-element loop per query
-    inside codegen; the GEMM path amortizes it into one vectorized
-    multiply per batch — the right trade when |queries| is large enough
-    that the per-pair loop dominates. Candidate traffic is
-    |queries| x k per partition, independent of corpus size. Distances
-    use float64 BLAS accumulation, which can differ from the sequential
-    fold by ~1 ulp — so distances are rounded to 6 dp BEFORE the
-    partition-local top-k and the global rank window, not just on
-    output: the neighbor CHOICE (argmin) is then decided on the same
-    6-dp value an exact-fold oracle computes, and an ulp-level BLAS
-    near-tie cannot flip which neighbor wins (ties at 6 dp break by
-    neighbor_id on both sides). Oracles for GEMM-backed queries mirror
-    ``round(d, 6)`` in their ORDER BY.
-    """
+def _topk_join(corpus: DataFrame, queries: DataFrame, k: int,
+               corpus_vec: str, corpus_id: str, query_vec: str,
+               query_id: str, exclude_self: bool, distances) -> DataFrame:
+    """The one vectorized join kernel: the query block is collected and
+    shipped to every corpus partition; each Arrow batch becomes a
+    float64 matrix ``C`` scored by ``distances(C, Q)`` (rows: corpus,
+    columns: queries); each query keeps its partition-local top-k by
+    (distance, id), NaN last; a rank window reduces the tiny candidate
+    set to the global top-k (:func:`_rank`). Candidate traffic is
+    |queries| x k per partition, independent of corpus size."""
     import numpy as np
     import pandas as pd
 
+    def matrix(vectors) -> np.ndarray:
+        return np.array([list(map(float, v)) for v in vectors],
+                        dtype=np.float64)
+
     qrows = queries.select(query_id, query_vec).collect()
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    Q = np.array([list(map(float, r[1])) for r in qrows], dtype=np.float64)
-    qnorm = np.sqrt((Q * Q).sum(axis=1))
-
-    out_schema = ("query_id bigint, neighbor_id bigint, "
-                  "distance_score double")
+    Q = matrix([r[1] for r in qrows])
 
     def score_partition(batches):
         for pdf in batches:
-            if pdf.empty:
+            if pdf.empty or not len(qids):
                 continue
             ids = pdf[corpus_id].to_numpy(dtype=np.int64)
-            C = np.array([list(map(float, v)) for v in pdf[corpus_vec]],
-                         dtype=np.float64)
-            cnorm = np.sqrt((C * C).sum(axis=1))
-            # round BEFORE ranking so the argmin is ulp-drift-proof;
-            # 0/0 (zero-norm vector) is a deliberate NaN, not an error
-            with np.errstate(invalid="ignore", divide="ignore"):
-                dist = np.round(1.0 - (C @ Q.T) / np.outer(cnorm, qnorm),
-                                6)
+            dist = distances(matrix(pdf[corpus_vec]), Q)
             nq = len(qids)
             kk = min(k, len(ids))
             # self-exclusion by dropping the row INDEX, never by value
@@ -142,22 +124,75 @@ def similarity_join_gemm(corpus: DataFrame, queries: DataFrame, k: int = 3,
             })
 
     partial = corpus.select(corpus_id, corpus_vec).mapInPandas(
-        score_partition, out_schema)
+        score_partition,
+        "query_id bigint, neighbor_id bigint, distance_score double")
     # A NaN distance (zero-norm vector: numpy 0/0) crosses the
     # pandas->Arrow boundary as NULL (NaN is pandas' null sentinel).
     # That NULL is the correct output — the broadcast path's try_divide
     # and the DuckDB oracle's x/0 both yield NULL — but plain .asc()
     # would rank it FIRST, so a zero-norm candidate surviving the
     # partition-local top-k would beat every real neighbor (the r5/r6
-    # latent bug). nulls_last matches numpy's lexsort (NaN last) and
-    # the oracle's default NULLS LAST.
-    w = W.partitionBy("query_id").orderBy(
-        F.col("distance_score").asc_nulls_last(),
-        F.col("neighbor_id").asc())
-    return (partial.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank",
-                    F.round("distance_score", 6).alias("distance_score")))
+    # latent bug). _rank's nulls_last matches numpy's lexsort (NaN
+    # last) and the oracle's default NULLS LAST.
+    return _rank(partial, k)
+
+
+def _blas_distances(C, Q):
+    """Cosine distances from one BLAS product, rounded to 6 dp BEFORE
+    ranking so the argmin is ulp-drift-proof; 0/0 (zero-norm vector)
+    is a deliberate NaN, not an error."""
+    import numpy as np
+    cnorm = np.sqrt((C * C).sum(axis=1))
+    qnorm = np.sqrt((Q * Q).sum(axis=1))
+    with np.errstate(invalid="ignore", divide="ignore"):
+        return np.round(1.0 - (C @ Q.T) / np.outer(cnorm, qnorm), 6)
+
+
+def _fold_distances(C, Q):
+    """Cosine distances by the engine's sequential fold: one vectorized
+    outer-product accumulation per dimension, in element order — bit-
+    identical to the zip_with/aggregate fold per pair (likewise the
+    squared norms); 0/0 (zero-norm vector) is NaN."""
+    import numpy as np
+    cn2 = np.zeros(C.shape[0], dtype=np.float64)
+    qn2 = np.zeros(Q.shape[0], dtype=np.float64)
+    acc = np.zeros((C.shape[0], Q.shape[0]), dtype=np.float64)
+    for i in range(Q.shape[1]):
+        cn2 = cn2 + C[:, i] * C[:, i]
+        qn2 = qn2 + Q[:, i] * Q[:, i]
+        acc = acc + C[:, i, None] * Q[None, :, i]
+    with np.errstate(invalid="ignore", divide="ignore"):
+        return 1.0 - acc / np.outer(np.sqrt(cn2), np.sqrt(qn2))
+
+
+def similarity_join_gemm(corpus: DataFrame, queries: DataFrame, k: int = 3,
+                         corpus_vec: str = "embedding",
+                         corpus_id: str = "vec_id",
+                         query_vec: str = "embedding",
+                         query_id: str = "vec_id",
+                         exclude_self: bool = True) -> DataFrame:
+    """Same semantics as :func:`similarity_join`, different physical
+    strategy: the query block is shipped to every corpus partition and
+    each Arrow batch scores against it with one BLAS matrix multiply
+    (``C @ Q.T``), keeping only the partition-local top-k per query;
+    the global top-k reduces the tiny candidate set with a window.
+
+    Per corpus row the expression path folds a 64-element loop per query
+    inside codegen; the GEMM path amortizes it into one vectorized
+    multiply per batch — the right trade when |queries| is large enough
+    that the per-pair loop dominates. Candidate traffic is
+    |queries| x k per partition, independent of corpus size. Distances
+    use float64 BLAS accumulation, which can differ from the sequential
+    fold by ~1 ulp — so distances are rounded to 6 dp BEFORE the
+    partition-local top-k and the global rank window, not just on
+    output: the neighbor CHOICE (argmin) is then decided on the same
+    6-dp value an exact-fold oracle computes, and an ulp-level BLAS
+    near-tie cannot flip which neighbor wins (ties at 6 dp break by
+    neighbor_id on both sides). Oracles for GEMM-backed queries mirror
+    ``round(d, 6)`` in their ORDER BY.
+    """
+    return _topk_join(corpus, queries, k, corpus_vec, corpus_id, query_vec,
+                      query_id, exclude_self, _blas_distances)
 
 
 def similarity_join_gemm_exact(corpus: DataFrame, queries: DataFrame,
@@ -188,79 +223,5 @@ def similarity_join_gemm_exact(corpus: DataFrame, queries: DataFrame,
     partition-local top-k means candidate traffic is |Q| x k per
     partition, independent of corpus size (measured 1.84 -> 0.67 s on
     sim_join at sf0.1)."""
-    import numpy as np
-    import pandas as pd
-
-    qrows = queries.select(query_id, query_vec).collect()
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    Q = np.array([list(map(float, r[1])) for r in qrows],
-                 dtype=np.float64)
-    dim = Q.shape[1] if len(qrows) else 0
-    # query norms by the same sequential fold (sqrt of the running sum
-    # of squares, term order = element order)
-    qn2 = np.zeros(len(qrows), dtype=np.float64)
-    for i in range(dim):
-        qn2 = qn2 + Q[:, i] * Q[:, i]
-    qnorm = np.sqrt(qn2)
-
-    out_schema = ("query_id bigint, neighbor_id bigint, "
-                  "distance_score double")
-
-    def score_partition(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf[corpus_id].to_numpy(dtype=np.int64)
-            C = np.array([list(map(float, v)) for v in pdf[corpus_vec]],
-                         dtype=np.float64)
-            cn2 = np.zeros(len(ids), dtype=np.float64)
-            for i in range(dim):
-                cn2 = cn2 + C[:, i] * C[:, i]
-            cnorm = np.sqrt(cn2)
-            # exact sequential fold across the pair matrix: one
-            # vectorized outer-product accumulation per dimension, in
-            # element order — bit-identical to the zip_with/aggregate
-            # fold per pair
-            acc = np.zeros((len(ids), len(qids)), dtype=np.float64)
-            for i in range(dim):
-                acc = acc + C[:, i, None] * Q[None, :, i]
-            with np.errstate(invalid="ignore", divide="ignore"):
-                dist = 1.0 - acc / np.outer(cnorm, qnorm)
-            nq = len(qids)
-            kk = min(k, len(ids))
-            self_pos = ({int(v): i for i, v in enumerate(ids)}
-                        if exclude_self else {})
-            out_q = np.empty(nq * kk, dtype=np.int64)
-            out_n = np.empty(nq * kk, dtype=np.int64)
-            out_d = np.empty(nq * kk, dtype=np.float64)
-            pos = 0
-            for j in range(nq):
-                col = dist[:, j]
-                order = np.lexsort((ids, col))   # NaN last, id tiebreak
-                sp = self_pos.get(int(qids[j]))
-                if sp is not None:
-                    order = order[order != sp]
-                take = order[:kk]
-                t = len(take)
-                out_q[pos:pos + t] = qids[j]
-                out_n[pos:pos + t] = ids[take]
-                out_d[pos:pos + t] = col[take]
-                pos += t
-            yield pd.DataFrame({
-                "query_id": out_q[:pos],
-                "neighbor_id": out_n[:pos],
-                "distance_score": out_d[:pos],
-            })
-
-    partial = corpus.select(corpus_id, corpus_vec).mapInPandas(
-        score_partition, out_schema)
-    # NaN -> NULL across the pandas->Arrow boundary; nulls_last matches
-    # lexsort's NaN-last and the oracle's NULLS LAST (see
-    # similarity_join_gemm's note on the r5/r6 latent bug)
-    w = W.partitionBy("query_id").orderBy(
-        F.col("distance_score").asc_nulls_last(),
-        F.col("neighbor_id").asc())
-    return (partial.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank",
-                    F.round("distance_score", 6).alias("distance_score")))
+    return _topk_join(corpus, queries, k, corpus_vec, corpus_id, query_vec,
+                      query_id, exclude_self, _fold_distances)

@@ -18,20 +18,22 @@ def shuffle_width(spark) -> int:
     """``spark.sql.shuffle.partitions`` as an int — the width CPU-dense
     small-byte stages pin their exchange to (guide §2.5) — falling back
     to ``sparkContext.defaultParallelism`` on platforms where the conf
-    is non-numeric (e.g. "auto" under externally managed AQE). Shared
-    helper per ADVICE r16 #2 (the inline ``int(conf.get(...))`` sites
-    raised ValueError there)."""
+    is non-numeric (e.g. "auto" under externally managed AQE) or below
+    1. Shared helper per ADVICE r16 #2 (the inline
+    ``int(conf.get(...))`` sites raised ValueError there)."""
     try:
-        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+        width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
-        return spark.sparkContext.defaultParallelism
+        width = 0
+    return width if width >= 1 else spark.sparkContext.defaultParallelism
 
 
 def widen(df: DataFrame, target: int | None = None) -> DataFrame:
-    """Repartition up to ``target`` (default: cluster parallelism) when the
-    plan currently has fewer partitions; never narrows."""
-    sc = df.sparkSession.sparkContext
-    target = target or sc.defaultParallelism
+    """Repartition up to ``target`` (default: :func:`shuffle_width`) when
+    the plan currently has fewer partitions; never narrows. The default
+    is the configured shuffle width rather than the executor core
+    count, so the same code yields the same plan on any host size."""
+    target = target or shuffle_width(df.sparkSession)
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -5930,16 +5930,11 @@ def filtered_knn(spark, sf_dir):
     TakeOrderedAndProject over the surviving sliver, so k results are
     guaranteed — a post-filtered ANN would return <k whenever the
     filter is selective inside the probed buckets."""
-    from ..functions.vector import cosine_distance
     emb = (_t(spark, sf_dir, "embeddings")
            .filter(F.col("label").isin(2, 5)))
-    d = cosine_distance(F.col("embedding"),
-                        F.array(*[F.lit(v) for v in QUERY_VEC]))
-    return (emb.select("vec_id", "label", d.alias("dist"))
-            .orderBy(F.col("dist").asc(), F.col("vec_id").asc())
-            .limit(5)
+    return (knn_topk(emb, QUERY_VEC, 5, tiebreak="vec_id")
             .select("vec_id", "label",
-                    F.round("dist", 6).alias("distance_score")))
+                    F.round("distance_score", 6).alias("distance_score")))
 
 
 _HYBRID_Q = "data query spark"
@@ -6023,7 +6018,7 @@ def hybrid_search_rrf(spark, sf_dir):
         "doc_id", F.row_number().over(
             W.orderBy(F.col("bm25").desc(), F.col("doc_id")))
         .alias("r_lex"))
-    qv = F.array(*[F.lit(v) for v in _hybrid_qvec()])
+    qv = V.vector_lit(_hybrid_qvec())
     # r5: the vector arm reads the MATERIALIZED per-corpus embedding
     # frame (built once by the Arrow hash-embed kernel — the embedding
     # pass a pipeline persists beside the corpus, like the reference's
@@ -6426,16 +6421,34 @@ def pq_adc_topk_q(spark, sf_dir):
     is 4 literal-LUT lookups summed in m order (fixed order, engine-
     exact); the cut is TakeOrderedAndProject; the 10-row result joins
     back to raw embeddings for the exact column."""
-    import os
     path = _ivfpq_path(spark, sf_dir)
+    codes = spark.read.parquet(path).select("vec_id", "codes")
+    top = (codes.select("vec_id", _pq_adc_estimate(spark, path)
+                        .alias("approx_dist"))
+           .orderBy(F.col("approx_dist").asc(), F.col("vec_id").asc())
+           .limit(10))
+    emb = _t(spark, sf_dir, "embeddings")
+    qv = V.vector_lit(QUERY_VEC)
+    return (top.join(emb, "vec_id")
+            .select("vec_id", "approx_dist",
+                    F.round(V.l2_sq(F.col("embedding"), qv), 6)
+                    .alias("exact_dist")))
+
+
+def _pq_adc_estimate(spark, path) -> Column:
+    """The ADC distance estimate of each row's ``codes`` against
+    QUERY_VEC, rounded to 6 dp: the m*k lookup table is computed
+    driver-side from the index's bounded ``_codebooks`` sidecar with the
+    engines' sequential fold (:func:`_py_l2_sq`), then the estimate is
+    the m table lookups summed in m order (fixed order, engine-exact)."""
+    import os
     cbs = spark.read.parquet(os.path.join(path, "_codebooks")).collect()
     qsubs = _pq_query_subs()
     flat = [0.0] * (_PQ_M * _PQ_K)
     for r in cbs:
         flat[r["m"] * _PQ_K + r["cid"]] = _py_l2_sq(qsubs[r["m"]],
                                                     r["cvec"])
-    flat_col = F.array(*[F.lit(v) for v in flat])
-    codes = spark.read.parquet(path).select("vec_id", "codes")
+    flat_col = V.vector_lit(flat)
     est = None
     for m in range(_PQ_M):
         term = F.element_at(flat_col,
@@ -6443,15 +6456,7 @@ def pq_adc_topk_q(spark, sf_dir):
                              + F.element_at("codes", m + 1) + 1)
                             .cast("int"))
         est = term if est is None else est + term
-    top = (codes.select("vec_id", F.round(est, 6).alias("approx_dist"))
-           .orderBy(F.col("approx_dist").asc(), F.col("vec_id").asc())
-           .limit(10))
-    emb = _t(spark, sf_dir, "embeddings")
-    qv = F.array(*[F.lit(v) for v in QUERY_VEC])
-    return (top.join(emb, "vec_id")
-            .select("vec_id", "approx_dist",
-                    F.round(V.l2_sq(F.col("embedding"), qv), 6)
-                    .alias("exact_dist")))
+    return F.round(est, 6)
 
 
 def _py_l2_sq(a, b) -> float:
@@ -6551,49 +6556,22 @@ def ivfpq_topk_q(spark, sf_dir):
     along so the estimator error is visible. LUT values are computed
     driver-side from the `_codebooks` sidecar with the same sequential
     fold the engines use — engine-exact end to end."""
-    path = _ivfpq_path(spark, sf_dir)
     import os
+    path = _ivfpq_path(spark, sf_dir)
     cents = spark.read.parquet(os.path.join(path, "_centroids")).collect()
-
-    def cos_dist(a, b):
-        import math
-        na = math.sqrt(sum(float(x) * float(x) for x in a)) or 1.0
-        nb = math.sqrt(sum(float(x) * float(x) for x in b)) or 1.0
-        s = 0.0
-        for x, y in zip(a, b):
-            s = s + float(x) * float(y)
-        return 1.0 - s / (na * nb)
-
-    probes = [r.cid for r in sorted(
-        cents, key=lambda r: (cos_dist(r.cvec, QUERY_VEC), r.cid))[:4]]
-    cbs = spark.read.parquet(os.path.join(path, "_codebooks")).collect()
-    qsubs = _pq_query_subs()
-    flat = [0.0] * (_PQ_M * _PQ_K)
-    for r in cbs:
-        flat[r["m"] * _PQ_K + r["cid"]] = _py_l2_sq(qsubs[r["m"]],
-                                                    r["cvec"])
-    flat_col = F.array(*[F.lit(v) for v in flat])
+    probes = ANN._nearest_cells(QUERY_VEC, [(r.cid, r.cvec) for r in cents],
+                                4)
     cand = (spark.read.parquet(path)
             .filter(F.col("cid").isin(probes)))
-    est = None
-    for m in range(_PQ_M):
-        term = F.element_at(flat_col,
-                            (F.lit(m * _PQ_K)
-                             + F.element_at("codes", m + 1) + 1)
-                            .cast("int"))
-        est = term if est is None else est + term
-    short = (cand.select("vec_id",
-                         F.round(est, 6).alias("approx_dist"))
+    short = (cand.select("vec_id", _pq_adc_estimate(spark, path)
+                         .alias("approx_dist"))
              .orderBy(F.col("approx_dist").asc(), F.col("vec_id").asc())
              .limit(30))
     emb = _t(spark, sf_dir, "embeddings")
-    qv = F.array(*[F.lit(v) for v in QUERY_VEC])
-    d = V.cosine_distance(F.col("embedding"), qv)
-    return (short.join(emb, "vec_id")
-            .select("vec_id", d.alias("_d"), "approx_dist")
-            .orderBy(F.col("_d").asc(), F.col("vec_id").asc())
-            .limit(5)
-            .select("vec_id", F.round("_d", 6).alias("distance_score"),
+    return (knn_topk(short.join(emb, "vec_id"), QUERY_VEC, 5,
+                     tiebreak="vec_id")
+            .select("vec_id",
+                    F.round("distance_score", 6).alias("distance_score"),
                     "approx_dist"))
 
 
@@ -8643,7 +8621,6 @@ def corpus_refresh_cycle_q(spark, sf_dir):
     derives provenance from the fixture cohorts)."""
     from ..functions.embed import hash_embed_udf
     from ..functions.text import fingerprint
-    from ..functions.vector import cosine_distance
     from ..partitioning import widen
     d = widen(_t(spark, sf_dir, "documents"))
     old_text = (F.when(F.col("doc_id") % 10 == 5,
@@ -8675,13 +8652,10 @@ def corpus_refresh_cycle_q(spark, sf_dir):
                .select("doc_id", F.col("s_v").alias("v"),
                        F.lit("carried").alias("state")))
     refreshed = carried.unionByName(fresh)
-    qv = F.array(*[F.lit(float(x)) for x in _hybrid_qvec()])
-    dist = cosine_distance(F.col("v"), qv)
-    return (refreshed.select("doc_id", "state", dist.alias("dist"))
-            .orderBy(F.col("dist").asc(), F.col("doc_id").asc())
-            .limit(10)
+    return (knn_topk(refreshed, _hybrid_qvec(), 10, vec_col="v",
+                     tiebreak="doc_id")
             .select("doc_id", "state",
-                    F.round("dist", 6).alias("distance_score")))
+                    F.round("distance_score", 6).alias("distance_score")))
 
 
 def _refresh_compact_sql() -> str:
@@ -8771,7 +8745,7 @@ def refresh_compact_cycle_q(spark, sf_dir):
             spark, path, cur, hash_embed_udf(normalized=False),
             range_width=_STORE_RANGE_W)
         open(marker, "w").close()
-    qv = F.array(*[F.lit(float(x)) for x in _hybrid_qvec()])
+    qv = V.vector_lit(_hybrid_qvec())
     return (spark.read.parquet(path)
             .select("doc_id", "fp",
                     F.col("id_range").cast("bigint").alias("id_range"),

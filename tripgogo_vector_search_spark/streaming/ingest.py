@@ -110,13 +110,14 @@ def default_state_partitions(spark: SparkSession) -> int:
     """Stateful-operator partition count for the finite-fixture streams:
     ``spark.tripgogo.stream.statePartitions`` when set (a deployment
     sizes it to peak expected state), else the measured fixture-scale
-    value 8. Non-numeric conf values fall back rather than raise, same
-    policy as partitioning.shuffle_width."""
+    value 8. Non-numeric or below-1 conf values fall back rather than
+    raise, same policy as partitioning.shuffle_width."""
     try:
-        return int(spark.conf.get(
+        width = int(spark.conf.get(
             "spark.tripgogo.stream.statePartitions", "8"))
     except (TypeError, ValueError):
-        return 8
+        width = 0
+    return width if width >= 1 else 8
 
 
 def run_stream_to_table(spark: SparkSession, stream_df: DataFrame,
